@@ -6,8 +6,24 @@ import org.apache.spark.sql.SparkSession
   * settings graft's semantics assume and the adaptive features a large
   * cluster needs. Use this (or mirror these settings) in any application
   * embedding the library.
+  *
+  * An embedder that builds its own session should at least mirror
+  * [[LocalFileSystemConf]]: without Hadoop's native library every local
+  * directory and file a write creates otherwise costs a spawned `chmod`
+  * process. The setting only affects `file://` paths; HDFS, object stores
+  * and cluster file systems resolve as before.
   */
 object GraftSession {
+
+  /** Registers [[graft.sources.InProcessLocalFileSystem]] for `file://`.
+    * Hadoop caches file systems per scheme, authority and user, not per
+    * implementation class: a `file://` instance created earlier in the
+    * JVM from a configuration without this setting keeps being returned,
+    * so set it on the first session the JVM builds.
+    */
+  val LocalFileSystemConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" ->
+      classOf[graft.sources.InProcessLocalFileSystem].getName)
 
   /** @param shufflePartitions size to ~2-3× total executor cores, or rely
     *                          on AQE coalescing at scale.
@@ -16,6 +32,7 @@ object GraftSession {
               shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .config(LocalFileSystemConf)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // pandas-style coerce semantics (null on bad cast) — the reference's

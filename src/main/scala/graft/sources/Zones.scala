@@ -31,12 +31,16 @@ object SourceGuard {
       throw new EmptySourceException(
         s"no source directory at $path — upstream produced nothing for this " +
           "date; check the upstream logs before re-running")
-    val it = fs.listFiles(p, true)
-    var n = 0
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(suffix) && f.getLen > 0) n += 1
-    }
+    // listStatus, not listFiles: a LocatedFileStatus loads each file's
+    // permission, which on a local file system without Hadoop's native
+    // library spawns an `ls -ld` process per file
+    def count(dir: org.apache.hadoop.fs.Path): Int =
+      fs.listStatus(dir).iterator.map { f =>
+        if (f.isDirectory) count(f.getPath)
+        else if (f.getPath.getName.endsWith(suffix) && f.getLen > 0) 1
+        else 0
+      }.sum
+    val n = count(p)
     if (n == 0)
       throw new EmptySourceException(
         s"no non-empty *$suffix files under $path — refusing to overwrite " +

@@ -17,6 +17,7 @@ object SparkSpec {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .config(GraftSession.LocalFileSystemConf)
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
