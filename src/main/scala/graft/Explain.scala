@@ -2,8 +2,6 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the formatted physical plan of every SparkEntry query to a
   * markdown file — the plan-quality audit trail (pushdown, pruned schemas,
   * broadcast vs shuffle joins, codegen spans).
@@ -14,15 +12,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("EXPLAINS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    // the bench's session (GraftSession.builder), so the dumped plans are
+    // the plans Bench and Verify run
+    val spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val pw = new PrintWriter(new File(outFile))
     pw.println(s"# Physical plans (`explain formatted`) at $sfDir\n")

@@ -73,8 +73,9 @@ object Upsert {
     * partition column, which prunes at the file index (untouched partition
     * files are never OPENED, let alone rewritten); (3) the logical merge
     * runs over that slice; (4) [[graft.sources.CleanZone
-    * .writePartitionedIsolated]] stages and atomically swaps ONLY the
-    * touched partition directories. Untouched partitions stay
+    * .writePartitionedIsolated]] stages and swaps ONLY the touched
+    * partition directories, each through [[graft.sources.Publish]].
+    * Untouched partitions stay
     * byte-identical on disk (spec-asserted).
     *
     * Contract: the partition column joins as part of the merge key — a

@@ -1,8 +1,11 @@
 package graft.operators.dedup
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.sources.Publish
 
 /** INCREMENTAL duplicate-CLUSTER maintenance — the last history-rescan
   * in the media-dedup story closed: the pair LEDGERS
@@ -36,10 +39,10 @@ import org.apache.spark.sql.types._
   * Layout under `stateDir`: `state/batch=N/` delta dirs of (node, rep),
   * LATEST batch wins per node (the #30h incremental-span-state
   * discipline). Appends are batch-keyed and idempotent: the published
-  * dir is the applied marker (staging + rename, the
-  * [[BandedHashIndex]] protocol), so a streaming retry no-ops and
-  * returns the frozen delta. [[compact]] folds the resolved labelling
-  * into one dir (empty sentinel dirs preserve the markers).
+  * dir is the applied marker (a [[Publish.replace]] of the batch dir),
+  * so a streaming retry no-ops and returns the frozen delta. [[compact]]
+  * folds the resolved labelling into one dir (empty sentinel dirs
+  * preserve the markers).
   *
   * Scale shape per append: one broadcast-mapping join against the state
   * table (narrow — the mapping is bounded by 2·|delta edges| reps) plus
@@ -70,11 +73,10 @@ object IncrementalClusters {
              aCol: String, bCol: String,
              batchId: Option[Long] = None): DataFrame = {
     require(aCol != bCol, s"pair columns must differ, got '$aCol' twice")
-    val root = s"$stateDir/state"
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = recovered(spark, stateDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bid = batchId.getOrElse(nextBatchId(fs, root))
-    val dir = new org.apache.hadoop.fs.Path(s"$root/batch=$bid")
+    val dir = new Path(root, s"batch=$bid")
     if (fs.exists(dir)) // applied marker: a retry is a pure read
       return spark.read.schema(stateSchema).parquet(dir.toString)
     val cur = resolve(spark, root)
@@ -133,14 +135,9 @@ object IncrementalClusters {
         relabeled.unionByName(entered)
       }
     // publish: stage hidden, rename into place — the dir is the marker
-    val staging = new org.apache.hadoop.fs.Path(s"$root/.staging_$bid")
-    if (fs.exists(staging))
-      require(fs.delete(staging, true), s"delete stale $staging failed")
     spark.sparkContext.setJobDescription(s"incr-clusters: fold batch=$bid")
-    delta.write.mode("error").parquet(staging.toString)
+    Publish.replace(fs, dir)(staging => delta.write.parquet(staging.toString))
     spark.sparkContext.setJobDescription(null)
-    fs.mkdirs(dir.getParent)
-    require(fs.rename(staging, dir), s"publish $staging -> $dir failed")
     spark.read.schema(stateSchema).parquet(dir.toString)
   }
 
@@ -158,7 +155,7 @@ object IncrementalClusters {
     // through Checkpoints.truncate (the reliable-checkpoint knob) and
     // releases the blocks with the query's scope.
     val st = graft.operators.OpCache.checkpoint(
-      resolve(spark, s"$stateDir/state"))
+      resolve(spark, recovered(spark, stateDir)))
     val sizes = st.groupBy(col("rep")).agg(count(lit(1)).as("cluster_size"))
     st.join(sizes, "rep")
       .select(col("node"), col("rep").as("cluster_rep"), col("cluster_size"))
@@ -174,18 +171,27 @@ object IncrementalClusters {
     * localCheckpoint job [[clusters]] needs to feed two branches.
     */
   def labelling(spark: SparkSession, stateDir: String): DataFrame =
-    resolve(spark, s"$stateDir/state")
+    resolve(spark, recovered(spark, stateDir))
+
+  /** The state root, after [[Publish.recover]] has rolled back or
+    * finished an interrupted [[compact]] swap — every entry point reads
+    * the state through it.
+    */
+  private def recovered(spark: SparkSession, stateDir: String): Path = {
+    val root = new Path(s"$stateDir/state")
+    Publish.recover(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+    root
+  }
 
   /** Latest-wins (node → rep) over the published delta dirs. */
-  private def resolve(spark: SparkSession, root: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) && fs.listStatus(p).exists(s =>
+  private def resolve(spark: SparkSession, root: Path): DataFrame = {
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasData = fs.exists(root) && fs.listStatus(root).exists(s =>
       s.isDirectory && s.getPath.getName.startsWith("batch="))
     if (!hasData)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    spark.read.schema(readSchema).parquet(root)
+    spark.read.schema(readSchema).parquet(root.toString)
       .groupBy(col("node"))
       .agg(max_by(col("rep"), col("batch")).as("rep"))
   }
@@ -193,11 +199,11 @@ object IncrementalClusters {
   /** Fold every delta dir into one `batch=<maxId>` of the RESOLVED
     * labelling (one row per node), leaving empty `batch=N` sentinel
     * dirs so applied markers — and therefore retry no-ops — survive the
-    * fold. Retire-swap like [[BandedHashIndex.compact]]. Returns the
+    * fold, through one [[Publish.replace]] of the state root. Returns the
     * number of non-empty dirs folded (0 = already compact).
     */
   def compact(spark: SparkSession, stateDir: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(s"$stateDir/state")
+    val root = recovered(spark, stateDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return 0
     val all = fs.listStatus(root).filter(s =>
@@ -209,42 +215,20 @@ object IncrementalClusters {
         !f.getPath.getName.startsWith("_")))
     if (nonEmpty.length < 2) return 0
     val maxId = all.map(idOf).max
-    val resolved = resolve(spark, root.toString)
-    val uuid = java.util.UUID.randomUUID
-    val staging = new org.apache.hadoop.fs.Path(
-      root.getParent, s".state-compact-$uuid")
-    val retired = new org.apache.hadoop.fs.Path(
-      root.getParent, s".state-retired-$uuid")
-    resolved.write.mode("error").parquet(s"$staging/batch=$maxId")
-    all.map(idOf).filter(_ != maxId).foreach { i =>
-      require(fs.mkdirs(new org.apache.hadoop.fs.Path(staging, s"batch=$i")),
-        s"sentinel batch=$i failed")
-    }
-    def mustRename(from: org.apache.hadoop.fs.Path,
-                   to: org.apache.hadoop.fs.Path): Unit =
-      require(fs.rename(from, to), s"rename $from -> $to failed")
-    try {
-      mustRename(root, retired)
-      try mustRename(staging, root)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          require(fs.rename(retired, root),
-            s"swap AND restore failed — data intact at $retired and $staging")
-          throw e
-      }
-      require(fs.delete(retired, true), s"delete $retired failed")
-    } finally {
-      if (fs.exists(staging) && fs.exists(root)) fs.delete(staging, true)
+    val resolved = resolve(spark, root)
+    Publish.replace(fs, root) { staging =>
+      resolved.write.parquet(s"$staging/batch=$maxId")
+      all.map(idOf).filter(_ != maxId).foreach(i =>
+        Publish.mkdirs(fs, new Path(staging, s"batch=$i")))
     }
     nonEmpty.length
   }
 
   private def nextBatchId(fs: org.apache.hadoop.fs.FileSystem,
-                          root: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(p)) 0L
+                          root: Path): Long = {
+    if (!fs.exists(root)) 0L
     else {
-      val ids = fs.listStatus(p).filter(s =>
+      val ids = fs.listStatus(root).filter(s =>
         s.isDirectory && s.getPath.getName.startsWith("batch="))
         .map(_.getPath.getName.stripPrefix("batch=").toLong)
       if (ids.isEmpty) 0L else ids.max + 1L

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
 import graft.operators.{BloomFilter, OpCache}
+import graft.sources.Publish
 
 /** INCREMENTAL exact-substring span removal — the daily-maintenance form
   * of [[SpanDedup]] (the #104/#93 discipline applied to the span grain):
@@ -184,33 +185,20 @@ object IncrementalSpanDedup {
       .select(col(idCol), col("n_tokens"), col("n_removed"), col("clean_text"))
 
   /** Crash recovery for [[compactCounts]]'s swap, run before every state
-    * read: a crash between the two renames leaves the fully-written
-    * `counts_tmp` and no `counts` — promote it; a crash after the promote
-    * leaves the retired copy — drop it. Each step checks the filesystem
-    * boolean (a silent rename failure here would otherwise read as "all
-    * historical counts are zero" and corrupt every later append).
+    * read ([[Publish.recover]]): a crash mid-swap would otherwise leave no
+    * `counts` dir, which reads as "all historical counts are zero" and
+    * corrupts every later append.
     */
-  private def recoverCounts(spark: SparkSession, root: String): Unit = {
-    val fs = hfs(spark, root)
-    val counts = new org.apache.hadoop.fs.Path(s"$root/counts")
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/counts_tmp")
-    val retired = new org.apache.hadoop.fs.Path(s"$root/counts_retired")
-    if (!fs.exists(counts) && fs.exists(tmp))
-      require(fs.rename(tmp, counts), s"recovery rename $tmp -> $counts failed")
-    if (fs.exists(counts) && fs.exists(retired))
-      require(fs.delete(retired, true), s"recovery delete $retired failed")
-  }
+  private def recoverCounts(spark: SparkSession, root: String): Unit =
+    Publish.recover(hfs(spark, root), new org.apache.hadoop.fs.Path(s"$root/counts"))
 
   /** Fold the count segments back to one (#49e's compaction discipline
     * applied to the span-count state): the logical count is already the
     * segment-sum, so compaction is a pure layout rewrite — one
     * partial-agg shuffle over the narrow (h, c) rows into a single
-    * `seg=0`, swapped in with the retire-then-promote discipline (write
-    * tmp fully → retire counts → promote tmp → drop retired; every
-    * rename/delete result is CHECKED, and [[recoverCounts]] replays an
-    * interrupted swap from whichever side survives). Run it on whatever
-    * cadence keeps the per-append segment fan-in bounded; the maintained
-    * output is invariant (spec-pinned).
+    * `seg=0`, swapped in by one [[Publish.replace]] of `counts`. Run it on
+    * whatever cadence keeps the per-append segment fan-in bounded; the
+    * maintained output is invariant (spec-pinned).
     */
   def compactCounts(spark: SparkSession, root: String): Unit = {
     recoverCounts(spark, root)
@@ -218,14 +206,8 @@ object IncrementalSpanDedup {
     checkOrWriteLayout(spark, root)
     val merged = spark.read.parquet(s"$root/counts")
       .groupBy(col("__h")).agg(sum(col("__c")).as("__c"))
-    merged.write.mode("overwrite").parquet(s"$root/counts_tmp/seg=0")
-    val fs = hfs(spark, root)
-    val counts = new org.apache.hadoop.fs.Path(s"$root/counts")
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/counts_tmp")
-    val retired = new org.apache.hadoop.fs.Path(s"$root/counts_retired")
-    require(fs.rename(counts, retired), s"retire $counts failed")
-    require(fs.rename(tmp, counts), s"promote $tmp -> $counts failed")
-    require(fs.delete(retired, true), s"drop $retired failed")
+    Publish.replace(hfs(spark, root), new org.apache.hadoop.fs.Path(s"$root/counts"))(
+      staging => merged.write.parquet(s"$staging/seg=0"))
   }
 
   /** Ingest one day's delta; updates every state table and the maintained

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.OpCache
+import graft.sources.Publish
 
 /** The GENERIC incremental banded-hash index — the daily-append
   * discipline (#30h's incremental span state, #36f's incremental IVF)
@@ -112,8 +113,7 @@ object BandedHashIndex {
       s"banded retrieval is exact only for maxHamming < bands, " +
         s"got maxHamming=$maxHamming bands=$bands")
     val postPath = s"$indexDir/postings"
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = recovered(spark, indexDir)
     val bid = batchId.getOrElse(nextBatchId(spark, s"$indexDir/pairs"))
     val pairsDir = new org.apache.hadoop.fs.Path(s"$indexDir/pairs/batch=$bid")
     val postDir = new org.apache.hadoop.fs.Path(s"$postPath/batch=$bid")
@@ -126,8 +126,7 @@ object BandedHashIndex {
     }
     // crashed partial publish (postings without the marker): roll back
     // so the pair computation below sees a store WITHOUT this batch
-    if (fs.exists(postDir))
-      require(fs.delete(postDir, true), s"rollback $postDir failed")
+    if (fs.exists(postDir)) Publish.delete(fs, postDir)
     // the delta postings feed three consumers (both dd sides, dx, the
     // persist) over the whole decode+hash lineage — decode once
     val deltaPost = OpCache.cache(ImageHash.bandedPostings(
@@ -173,7 +172,7 @@ object BandedHashIndex {
       .groupBy(col("a_id"), col("b_id"))
       .agg(min(col(spec.hamCols.head)).as(spec.hamCols.head),
         spec.hamCols.tail.map(c => min(col(c)).as(c)): _*)
-    // Publish protocol (the SwapWrite discipline over two tables):
+    // Publish protocol (two [[Publish]] targets):
     //   1. STAGE both tables — the pair plan EXECUTES against the
     //      pre-append store (hidden staging dirs are invisible to the
     //      storedPost read, whose file list was fixed before staging
@@ -183,44 +182,29 @@ object BandedHashIndex {
     //      back-fills the pair join's stage tails instead of adding a
     //      serial write per append. Concurrent first-touch of the
     //      cached delta is compute-once (block-level locks); only the
-    //      RENAME order below is the correctness surface.
-    //   2. rename the postings into place;
-    //   3. rename the pairs staging into place LAST — the applied
-    //      marker, so it can never exist without the postings it was
-    //      computed against. A crash in any window leaves either hidden
-    //      stagings (deleted and redone on retry) or postings without
-    //      the marker (rolled back at the top of this method).
-    def stage(df: DataFrame, staging: org.apache.hadoop.fs.Path,
-              partitionCols: Seq[String]): Unit = {
-      if (fs.exists(staging))
-        require(fs.delete(staging, true), s"delete stale $staging failed")
-      val w = df.write.mode("error")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(staging.toString)
-    }
-    def rename(staging: org.apache.hadoop.fs.Path,
-               target: org.apache.hadoop.fs.Path): Unit = {
-      fs.mkdirs(target.getParent)
-      require(fs.rename(staging, target), s"publish $staging -> $target failed")
-    }
-    val pairsStaging =
-      new org.apache.hadoop.fs.Path(s"$indexDir/pairs/.staging_$bid")
-    val postStaging =
-      new org.apache.hadoop.fs.Path(s"$postPath/.staging_$bid")
+    //      PROMOTE order below is the correctness surface.
+    //   2. promote the postings;
+    //   3. promote the pairs LAST — the applied marker, so it can never
+    //      exist without the postings it was computed against. A crash
+    //      in any window leaves either hidden stagings (deleted and
+    //      redone on retry) or postings without the marker (rolled back
+    //      at the top of this method).
     val sc = spark.sparkContext
+    def stage(df: DataFrame, target: org.apache.hadoop.fs.Path,
+              partitionCols: Seq[String], what: String): () => Unit = () => {
+      sc.setJobDescription(s"banded-index: stage $what batch=$bid")
+      try Publish.stage(fs, target) { staging =>
+        val w = df.write
+        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+          .parquet(staging.toString)
+      }
+      finally sc.setJobDescription(null)
+    }
     graft.operators.Par.run(Seq(
-      () => {
-        sc.setJobDescription(s"banded-index: stage pairs batch=$bid")
-        try stage(pairs, pairsStaging, Nil)
-        finally sc.setJobDescription(null)
-      },
-      () => {
-        sc.setJobDescription(s"banded-index: stage postings batch=$bid")
-        try stage(deltaPost, postStaging, Seq("band"))
-        finally sc.setJobDescription(null)
-      }))
-    rename(postStaging, postDir)
-    rename(pairsStaging, pairsDir)
+      stage(pairs, pairsDir, Nil, "pairs"),
+      stage(deltaPost, postDir, Seq("band"), "postings")))
+    Publish.promote(fs, postDir)
+    Publish.promote(fs, pairsDir)
     spark.read.schema(pairsSchema(spec)).parquet(pairsDir.toString)
   }
 
@@ -249,7 +233,7 @@ object BandedHashIndex {
     */
   def pairs(spark: SparkSession, indexDir: String, spec: Spec): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$indexDir/pairs")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = recovered(spark, indexDir)
     val hasData = fs.exists(p) && fs.listStatus(p).exists(s =>
       s.isDirectory && s.getPath.getName.startsWith("batch="))
     require(hasData, s"no published ledger batches under $p")
@@ -289,11 +273,10 @@ object BandedHashIndex {
     * PRE-compaction [[append]] calls must be materialized (or consumed)
     * before compacting — single-writer discipline, same as [[append]].
     *
-    * Swap protocol = [[graft.sources.Compaction.compactDir]]'s
-    * retire-then-rename, applied per table root: stage the folded copy
-    * as a hidden sibling, retire the live root, rename the staging in,
-    * delete the retired copy — an in-process failure restores the old
-    * root, and no window exists where readers see doubled rows. Returns
+    * Each table root is folded by one [[Publish.replace]]: no window
+    * exists where readers see doubled rows, and a crash mid-swap is
+    * rolled back or finished by the next [[append]], [[pairs]] or
+    * [[compact]] call. Returns
     * the number of POSTINGS batch dirs folded (0 = already compact,
     * free to re-run; the pairs ledger folds whenever it has ≥ 2
     * non-empty batch dirs). Single-writer discipline, like [[append]].
@@ -301,53 +284,27 @@ object BandedHashIndex {
   def compact(spark: SparkSession, indexDir: String, spec: Spec): Int = {
     val postRoot = new org.apache.hadoop.fs.Path(s"$indexDir/postings")
     val pairsRoot = new org.apache.hadoop.fs.Path(s"$indexDir/pairs")
-    val fs = postRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = recovered(spark, indexDir)
     def batchDirs(root: org.apache.hadoop.fs.Path) =
       if (!fs.exists(root)) Array.empty[org.apache.hadoop.fs.FileStatus]
       else fs.listStatus(root).filter(s =>
         s.isDirectory && s.getPath.getName.startsWith("batch="))
     def idOf(s: org.apache.hadoop.fs.FileStatus): Long =
       s.getPath.getName.stripPrefix("batch=").toLong
-    def swap(root: org.apache.hadoop.fs.Path,
-             build: org.apache.hadoop.fs.Path => Unit): Unit = {
-      val uuid = java.util.UUID.randomUUID
-      val staging = new org.apache.hadoop.fs.Path(
-        root.getParent, s".${root.getName}-compact-$uuid")
-      val retired = new org.apache.hadoop.fs.Path(
-        root.getParent, s".${root.getName}-retired-$uuid")
-      build(staging)
-      def mustRename(from: org.apache.hadoop.fs.Path,
-                     to: org.apache.hadoop.fs.Path): Unit =
-        require(fs.rename(from, to), s"rename $from -> $to failed")
-      try {
-        mustRename(root, retired)
-        try mustRename(staging, root)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            require(fs.rename(retired, root),
-              s"swap AND restore failed — data intact at $retired and $staging")
-            throw e
-        }
-        require(fs.delete(retired, true), s"delete $retired failed")
-      } finally {
-        if (fs.exists(staging) && fs.exists(root)) fs.delete(staging, true)
-      }
-    }
     // markers first: only MARKED postings batches may fold (see scaladoc).
     // Orphans (postings without their pairs marker — a crashed append)
     // are DELETED up-front: exactly what their retry's rollback would do,
     // and folding one in would make that rollback delete the whole store
     val markedIds = batchDirs(pairsRoot).map(idOf).toSet
     batchDirs(postRoot).filterNot(s => markedIds.contains(idOf(s)))
-      .foreach(o => require(fs.delete(o.getPath, true),
-        s"delete orphan ${o.getPath} failed"))
+      .foreach(o => Publish.delete(fs, o.getPath))
     val postMarked = batchDirs(postRoot)
     val foldedPostings =
       if (postMarked.length < 2) 0
       else {
         val maxId = postMarked.map(idOf).max
         val marked = postMarked.map(_.getPath.toString)
-        swap(postRoot, staging =>
+        Publish.replace(fs, postRoot)(staging =>
           // explicit basePath: multiple batch=N inputs would otherwise
           // make partition discovery see conflicting structures
           spark.read.schema(postingsSchema(spec))
@@ -368,19 +325,29 @@ object BandedHashIndex {
       val maxId = pairsAll.map(idOf).max
       val nonEmpty = pairsNonEmpty.map(_.getPath.toString)
       val allIds = pairsAll.map(idOf)
-      swap(pairsRoot, staging => {
+      Publish.replace(fs, pairsRoot) { staging =>
         spark.read.schema(pairsSchema(spec))
           .option("basePath", pairsRoot.toString).parquet(nonEmpty: _*)
           .select(Seq(col("a_id"), col("b_id")) ++
             spec.hamCols.map(c => col(c).cast("int").as(c)): _*)
           .write.mode("error").parquet(s"$staging/batch=$maxId")
-        allIds.filter(_ != maxId).foreach { i =>
-          require(fs.mkdirs(new org.apache.hadoop.fs.Path(
-            staging, s"batch=$i")), s"sentinel batch=$i failed")
-        }
-      })
+        allIds.filter(_ != maxId).foreach(i =>
+          Publish.mkdirs(fs, new org.apache.hadoop.fs.Path(staging, s"batch=$i")))
+      }
     }
     foldedPostings
+  }
+
+  /** The index's file system, after [[Publish.recover]] has rolled back
+    * or finished an interrupted [[compact]] swap of either table root —
+    * every entry point reads the store through it.
+    */
+  private def recovered(spark: SparkSession, indexDir: String) = {
+    val fs = new org.apache.hadoop.fs.Path(indexDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("postings", "pairs").foreach(t =>
+      Publish.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/$t")))
+    fs
   }
 
   /** Next ledger batch number = max existing `batch=` id + 1 (0 when

@@ -44,7 +44,7 @@ object ImageHashIndex {
     BandedHashIndex.pairs(spark, indexDir, spec)
 
   /** Fold the postings batches (and the pairs ledger's data files) —
-    * [[BandedHashIndex.compact]]'s retire-swap with marker-preserving
+    * [[BandedHashIndex.compact]]'s Publish swap with marker-preserving
     * sentinels and orphan-safe exclusion. Returns postings dirs folded.
     */
   def compact(spark: SparkSession, indexDir: String): Int =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.{FxRates, GoldenJoin, Melt, QualityChecks, Upsert}
-import graft.sources.TrendsCsv
+import graft.sources.{Publish, TrendsCsv}
 
 /** The reference's remaining DAGs as composed library calls (trends_dag,
   * fx_rate_dag, analytics_dag). Together with [[TikiDailyPipeline]] these
@@ -43,21 +43,16 @@ object TrendsPipeline {
                                       delta: DataFrame, keys: Seq[String],
                                       keepCols: Seq[String] = Nil,
                                       preserveCols: Seq[String] = Nil): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val target = new org.apache.hadoop.fs.Path(path)
-    val backupPre = new org.apache.hadoop.fs.Path(s"$path-backup")
-    // Crash/rerun recovery: a failed swap leaves the merged history only in
-    // the backup dir. Restore it BEFORE deciding between merge-vs-fresh, or
-    // a rerun would rebuild from today's delta alone and then delete the
-    // backup holding every prior day.
-    if (!fs.exists(target) && fs.exists(backupPre))
-      require(fs.rename(backupPre, target), s"restore $backupPre -> $target failed")
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Crash/rerun recovery BEFORE deciding between merge-vs-fresh: a
+    // crashed swap can leave the merged history only in the retired dir,
+    // and a rerun that saw no target would rebuild from today's delta alone
+    Publish.recover(fs, target)
     val merged =
       if (fs.exists(target))
         Upsert.merge(spark.read.parquet(path), delta, keys, keepCols, preserveCols)
       else delta
-    val staging = new org.apache.hadoop.fs.Path(s"$path-staging")
     // the returned row count rides the staging WRITE through an
     // Observation (round 21) instead of a post-swap read-back count()
     // job: the write already evaluates every merged row, and the table
@@ -65,19 +60,8 @@ object TrendsPipeline {
     // old re-read count — one job per merge instead of two (q105 alone
     // drives 15 sequential merges)
     val obs = org.apache.spark.sql.Observation()
-    merged.observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(staging.toString)
-    val backup = new org.apache.hadoop.fs.Path(s"$path-backup")
-    // rename/delete signal failure by returning false on HDFS-style
-    // filesystems; check them or a failed swap silently loses the merge
-    if (fs.exists(target)) {
-      if (fs.exists(backup))
-        require(fs.delete(backup, true), s"delete $backup failed")
-      require(fs.rename(target, backup), s"rename $target -> $backup failed")
-    }
-    require(fs.rename(staging, target), s"rename $staging -> $target failed")
-    if (fs.exists(backup))
-      require(fs.delete(backup, true), s"delete $backup failed")
+    Publish.replace(fs, target)(staging =>
+      merged.observe(obs, count(lit(1)).as("n")).write.parquet(staging.toString))
     obs.get("n").asInstanceOf[Long]
   }
 }

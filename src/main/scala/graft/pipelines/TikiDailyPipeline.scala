@@ -179,10 +179,8 @@ object TikiDailyPipeline {
     Result(factRows, mergedDims, mergedCats, qualitySnap)
   }
 
-  /** MERGE `delta` into the parquet table at `path` (create if absent).
-    * Delegates to the shared swap implementation — it carries the
-    * backup-restore recovery and checked renames a crashed swap needs;
-    * re-implementing the protocol here once silently lost history.
+  /** MERGE `delta` into the parquet table at `path` (create if absent)
+    * through the shared [[graft.sources.Publish]] swap.
     */
   private def mergeInto(spark: SparkSession, path: String, delta: DataFrame,
                         keys: Seq[String], keepCols: Seq[String] = Nil,

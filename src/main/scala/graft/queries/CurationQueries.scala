@@ -887,7 +887,7 @@ object CurationQueries {
     * [[NbFeedCap]]`, the SF-invariant harness convention) arrives
     * through a REAL MemoryStream in [[NbStreamBatches]] micro-batches,
     * each scored with the frozen model and published as its own
-    * `score_batch` partition (staging → rename; the last batch is
+    * `score_batch` partition (a `Publish.replace`; the last batch is
     * re-applied directly and must no-op on the marker). The gated
     * result is the scored table read back from DISK — and the oracle is
     * q156's replay restricted to the fed ids, because frozen-model

@@ -735,7 +735,7 @@ object SimilarityQueries {
   /** q182: image-index COMPACTION invariance — the 41i/41l maintenance
     * step gated end-to-end: two daily appends land, the postings table
     * COMPACTS (every batch dir folds into one through the #49e
-    * retire-swap), then a third day appends AGAINST THE COMPACTED
+    * Publish swap), then a third day appends AGAINST THE COMPACTED
     * STORE. The union of the three ledger outputs must still equal
     * q167's one-shot Hamming-ball replay — a row lost or doubled by the
     * fold, or a post-compaction append that misses stored buckets,

@@ -128,9 +128,10 @@ object SourceGates {
   private val q118Invocation = new AtomicInteger(0)
 
   /** q118: SMALL-FILES COMPACTION (49e, [[Compaction.compactDir]]) — 16
-    * deliberately tiny files compact through the staged retire-then-swap
-    * rewrite; the require pins that a real rewrite happened (fewer files
-    * than before, more than zero), and the oracle gates CONTENT
+    * deliberately tiny files compact through the staged
+    * [[graft.sources.Publish.replace]] rewrite; the require pins that a
+    * real rewrite happened (fewer files than before, more than zero), and
+    * the oracle gates CONTENT
     * PRESERVATION, the property compaction must never break.
     */
   def q118Compaction(spark: SparkSession, dir: String): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Small-files compaction — the table-maintenance operator every
   * daily-append warehouse eventually needs: streaming sinks and per-day
@@ -12,11 +12,10 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * files, preserving content exactly.
   *
   * `coalesce` (narrow, no shuffle) merges the small inputs — compaction
-  * must not pay a full exchange just to concatenate files. The rewrite
-  * goes through a staging dir and the same retire-then-rename swap
-  * discipline as [[CleanZone.writePartitionedIsolated]]: a crash never
-  * leaves the partition missing — either the old dir or the staged new
-  * one survives intact.
+  * must not pay a full exchange just to concatenate files. The rewrite is
+  * a [[Publish.replace]] of the directory: a crash never loses the
+  * partition — the next `compactDir` on it restores the old files or
+  * completes the swap before it lists anything.
   */
 object Compaction {
 
@@ -36,43 +35,18 @@ object Compaction {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Publish.recover(fs, p)
     val files = dataFiles(spark, p)
     if (files.length < minFiles) return 0
     val total = files.map(_.getLen).sum
     val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
     if (n >= files.length) return 0 // already at target granularity
-    // dot-prefixed SIBLING names: partition discovery over the parent
-    // table must never see the in-flight copies as extra partitions
-    // (same discipline as writePartitionedIsolated's .retired-* dirs)
-    val uuid = java.util.UUID.randomUUID
-    val staging = new Path(p.getParent, s".${p.getName}-compact-$uuid")
-    val retired = new Path(p.getParent, s".${p.getName}-retired-$uuid")
     // mergeSchema: the small files being compacted are exactly the
     // schema-drift case (readMerged's rationale) — a single-footer read
     // would silently drop columns absent from the chosen footer
-    spark.read.option("mergeSchema", "true").parquet(dir).coalesce(n)
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    def mustRename(from: Path, to: Path): Unit =
-      require(fs.rename(from, to), s"rename $from -> $to failed")
-    try {
-      mustRename(p, retired)
-      try mustRename(staging, p)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          // the partition must never be left missing: put the old data
-          // back before propagating (if even the restore fails, the
-          // staged copy survives — the finally guard below keeps it)
-          require(fs.rename(retired, p),
-            s"swap AND restore failed — data intact at $retired and $staging")
-          throw e
-      }
-      require(fs.delete(retired, true), s"delete $retired failed")
-    } finally {
-      // delete the staged copy only when the partition dir exists (swap
-      // done, or old data restored / never moved); if the partition is
-      // missing, staging is the sole surviving copy — keep it
-      if (fs.exists(staging) && fs.exists(p)) fs.delete(staging, true)
-    }
+    Publish.replace(fs, p)(staging =>
+      spark.read.option("mergeSchema", "true").parquet(dir).coalesce(n)
+        .write.parquet(staging.toString))
     n
   }
 }

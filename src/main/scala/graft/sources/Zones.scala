@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -95,14 +96,12 @@ object RawZone {
     val corrupt = parsed.filter(col("_corrupt_record").isNotNull)
       .select(col("_corrupt_record").as("value"))
     // text sink: one original line per row; empty quarantine is fine.
-    // Deterministic per-date subdirectory + Overwrite keeps REPLAYS
-    // idempotent (an Append at the root would re-append the same corrupt
-    // lines on every re-run of the day, silently duplicating the audit
-    // trail): the discovery-visible slot always MIRRORS the day's current
-    // corrupt set. Superseded evidence is retired into a dot-dir first
-    // (invisible to discovery, recoverable) — a replay after an upstream
-    // fix must not silently destroy the captured bad lines, the same
-    // retire-then-swap discipline as CleanZone.writePartitionedIsolated.
+    // Deterministic per-date subdirectory, REPLACED on each run, keeps
+    // REPLAYS idempotent (an Append at the root would re-append the same
+    // corrupt lines on every re-run of the day, silently duplicating the
+    // audit trail): the discovery-visible slot always MIRRORS the day's
+    // current corrupt set, swapped in whole by Publish.replace — a crash
+    // mid-replay leaves the previous evidence, never a torn slot.
     val slot = new org.apache.hadoop.fs.Path(s"$quarantinePath/date=${date.getOrElse("all")}")
     val fs = slot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // A dateless replay captures EVERY date's corrupt lines under date=all,
@@ -121,12 +120,7 @@ object RawZone {
           "dated and dateless (date=all) quarantine slots overlap and must " +
           "not share one root; use a separate quarantinePath for full replays")
     }
-    if (fs.exists(slot)) {
-      val retired = new org.apache.hadoop.fs.Path(quarantinePath,
-        s".retired-${slot.getName}-${java.util.UUID.randomUUID}")
-      require(fs.rename(slot, retired), s"retire $slot failed")
-    }
-    corrupt.write.mode(SaveMode.Overwrite).text(slot.toString)
+    Publish.replace(fs, slot)(staging => corrupt.write.text(staging.toString))
     parsed.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
   }
 }
@@ -168,51 +162,36 @@ object CleanZone {
     * decorator). Plain dynamic overwrite shares one `_temporary` staging
     * tree per table across jobs, so job A's commit/abort can delete job
     * B's in-flight files. Here each write stages into its own unique
-    * directory and then swaps ONLY its partition directories into the
-    * table — concurrent writers touch disjoint paths end-to-end (per-day
-    * dir replacement; rename is atomic per directory on HDFS-style
-    * filesystems).
+    * hidden directory, then swaps each of its partition directories into
+    * the table with [[Publish.replace]] — concurrent writers touch
+    * disjoint paths end-to-end.
+    *
+    * Each partition directory is its own publish target: a crash leaves
+    * every partition holding its old or its new files, and the next write
+    * of a partition repairs it. A crash during the staged Spark write
+    * or its swaps leaves this call's unique staging dir behind (hidden
+    * from readers): a concurrent writer's staging dir looks the same, so
+    * no writer may remove it.
     */
   def writePartitionedIsolated(df: DataFrame, path: String,
                                partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty, "need at least one partition column")
-    val spark = df.sparkSession
-    val staging = s"$path-staging-${java.util.UUID.randomUUID}"
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-      .parquet(staging)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Old partition data retires into a dot-dir (invisible to Spark's
-    // partition discovery) instead of being deleted before the new dir
-    // lands: a crash between the two renames loses nothing — the old data
-    // sits recoverable in .retired-*, the new data in the staging dir. The
-    // reader-visible gap is one rename, not an O(files) delete.
-    val trash = new org.apache.hadoop.fs.Path(path,
-      s".retired-${java.util.UUID.randomUUID}")
-    def swap(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
-             depth: Int): Unit =
-      fs.listStatus(src).filter(s => s.isDirectory && s.getPath.getName.contains("="))
-        .foreach { part =>
-          val target = new org.apache.hadoop.fs.Path(dst, part.getPath.getName)
-          if (depth == partitionCols.size - 1) {
-            require(fs.mkdirs(dst) || fs.exists(dst), s"mkdirs $dst failed")
-            if (fs.exists(target)) {
-              require(fs.mkdirs(trash) || fs.exists(trash), s"mkdirs $trash failed")
-              require(fs.rename(target, new org.apache.hadoop.fs.Path(trash,
-                s"$depth-${part.getPath.getName}-${java.util.UUID.randomUUID}")),
-                s"retire $target failed")
-            }
-            require(fs.rename(part.getPath, target),
-              s"rename ${part.getPath} -> $target failed")
-          } else swap(part.getPath, target, depth + 1)
-        }
-    try {
-      swap(new org.apache.hadoop.fs.Path(staging),
-        new org.apache.hadoop.fs.Path(path), 0)
-      // only a fully successful swap discards the retired data; on failure
-      // the .retired-* dir stays behind as the recovery copy
-      fs.delete(trash, true)
-    } finally fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    val table = new Path(path)
+    val fs = table.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = new Path(table.getParent,
+      s".${table.getName}.staging-${java.util.UUID.randomUUID}")
+    df.write.partitionBy(partitionCols: _*).parquet(staging.toString)
+    // staged partition dirs as name paths (day=1 :: hour=2 :: Nil)
+    def under(root: Path, names: Seq[String]) = names.foldLeft(root)(new Path(_, _))
+    def leaves(names: Seq[String]): Seq[Seq[String]] =
+      if (names.size == partitionCols.size) Seq(names)
+      else fs.listStatus(under(staging, names)).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+        .flatMap(s => leaves(names :+ s.getPath.getName))
+    leaves(Nil).foreach(names =>
+      Publish.replace(fs, under(table, names))(to =>
+        Publish.rename(fs, under(staging, names), to)))
+    Publish.delete(fs, staging)
   }
 }
 

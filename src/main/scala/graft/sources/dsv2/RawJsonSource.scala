@@ -389,7 +389,7 @@ private[dsv2] class RawJsonFileLog(logDir: String,
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     // rename refuses an existing target: never overwrite a log position
-    require(fs.rename(tmp, p), s"publish $tmp -> $p failed")
+    graft.sources.Publish.rename(fs, tmp, p)
   }
 
   private def compact(): Unit = {
@@ -791,7 +791,7 @@ private[dsv2] class RawJsonBatchWrite(schema: StructType, path: String,
       fs.listStatus(target).foreach { s =>
         val n = s.getPath.getName
         if (!n.startsWith("_") && !n.startsWith("."))
-          require(fs.delete(s.getPath, true), s"truncate: delete ${s.getPath} failed")
+          graft.sources.Publish.delete(fs, s.getPath)
       }
     }
     messages.foreach { case RawJsonCommitMessage(staged) =>
@@ -800,8 +800,7 @@ private[dsv2] class RawJsonBatchWrite(schema: StructType, path: String,
       // (partitionId, taskId)-unique, and taskIds repeat across Spark
       // APPLICATIONS — two appends from different apps must never
       // rename onto the same target file
-      require(fs.rename(src, new Path(target, s"$queryId-${src.getName}")),
-        s"publish $src failed")
+      graft.sources.Publish.rename(fs, src, new Path(target, s"$queryId-${src.getName}"))
     }
     fs.delete(stagingDir, true)
     ()

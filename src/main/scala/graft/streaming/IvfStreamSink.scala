@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.similarity.IvfIncremental
+import graft.sources.Publish
 
 /** STREAMING IVF index maintenance — the streaming twin of
   * [[IvfIncremental.append]] (q126) under the q101/q106 sink discipline:
@@ -19,9 +20,8 @@ import graft.operators.similarity.IvfIncremental
   * would therefore cost O(corpus) I/O per micro-batch — exactly the
   * rebuild the incremental index exists to avoid. Instead each batch
   * writes its OWN partition directory `delta_batch=<batchId>/
-  * cluster_id=<c>/…` via the same staging → rename protocol
-  * ([[SwapWrite]]'s discipline scoped to one batch dir): stage the
-  * batch's parquet next to the target, then a single rename publishes
+  * cluster_id=<c>/…` through [[graft.sources.Publish]]: the batch's
+  * parquet is staged under a hidden name, then one rename publishes
   * it. Maintenance I/O is O(delta), and the Hive layout keeps
   * `cluster_id` a real partition column, so probe-time partition pruning
   * works across every delta (the q126 `PartitionFilters` story).
@@ -30,7 +30,8 @@ import graft.operators.similarity.IvfIncremental
   * post-staging rename, so its existence IS the applied marker —
   * foreachBatch's retry surface (Spark re-runs the CURRENT batch after
   * a sink failure) returns without reading or writing anything. A stale
-  * staging dir from a crashed attempt is deleted and rewritten.
+  * staging dir from a crashed attempt is deleted ([[Publish.recover]])
+  * and rewritten.
   *
   * The monoid contract (spec- and gate-pinned): after any batching of
   * the corpus, reading the index back equals the single-pass batch
@@ -50,14 +51,9 @@ object IvfStreamSink {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batchDir = new Path(s"$targetPath/delta_batch=$batchId")
     if (fs.exists(batchDir)) return // retry of an applied batch: no-op
-    val staging = new Path(s"$targetPath/.staging_$batchId")
-    if (fs.exists(staging)) // crashed attempt: rewrite from scratch
-      require(fs.delete(staging, true), s"delete stale $staging failed")
-    IvfIncremental.assignDelta(batch, trained, idCol, vecCol)
-      .write.partitionBy("cluster_id").parquet(staging.toString)
-    fs.mkdirs(new Path(targetPath)) // first batch: parent must exist
-    require(fs.rename(staging, batchDir),
-      s"publish $staging -> $batchDir failed")
+    Publish.replace(fs, batchDir)(staging =>
+      IvfIncremental.assignDelta(batch, trained, idCol, vecCol)
+        .write.partitionBy("cluster_id").parquet(staging.toString))
   }
 
   /** Read the maintained assignment table back into the searchable shape

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.NbClassifier
+import graft.sources.Publish
 
 /** STREAMING quality classification — the frozen-model twin of
   * [[NbClassifier.score]] (q156) under the [[IvfStreamSink]] sink
@@ -18,7 +19,7 @@ import graft.operators.NbClassifier
   * [[NbClassifier.scoreWith]] — a pure per-document function of the
   * frozen model (one in-batch token agg + broadcast model join), no
   * cross-batch state — and publishes the scored rows as its OWN
-  * `score_batch=<batchId>` partition via the staging → rename protocol:
+  * `score_batch=<batchId>` partition through [[graft.sources.Publish]]:
   * the published directory's existence IS the applied marker, so a
   * foreachBatch retry no-ops and a crashed staging attempt is deleted
   * and rewritten. Sink I/O is O(batch).
@@ -43,14 +44,9 @@ object NbStreamFilter {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batchDir = new Path(s"$targetPath/score_batch=$batchId")
     if (fs.exists(batchDir)) return // retry of an applied batch: no-op
-    val staging = new Path(s"$targetPath/.staging_$batchId")
-    if (fs.exists(staging)) // crashed attempt: rewrite from scratch
-      require(fs.delete(staging, true), s"delete stale $staging failed")
-    NbClassifier.scoreWith(model, batch, idCol, textCol)
-      .write.parquet(staging.toString)
-    fs.mkdirs(new Path(targetPath)) // first batch: parent must exist
-    require(fs.rename(staging, batchDir),
-      s"publish $staging -> $batchDir failed")
+    Publish.replace(fs, batchDir)(staging =>
+      NbClassifier.scoreWith(model, batch, idCol, textCol)
+        .write.parquet(staging.toString))
   }
 
   /** Read the scored table back in [[NbClassifier.score]]'s shape (the

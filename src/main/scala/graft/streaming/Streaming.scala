@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.Upsert
+import graft.sources.Publish
 
 /** One event row (events table schema subset) for typed streaming ops. */
 final case class Event(user_id: Long, ts: java.sql.Timestamp,
@@ -232,11 +233,9 @@ object StreamJoin {
   * each micro-batch upserts into a parquet target via foreachBatch +
   * [[Upsert.merge]].
   *
-  * Swap protocol: write staging → move current target to a backup → move
-  * staging in → drop backup. This is NOT atomic (plain filesystems have no
-  * multi-dir transactions) but every crash window leaves a recoverable
-  * full copy: either the backup or the staging dir still holds the merged
-  * history. Use a transactional table format for exactly-once guarantees.
+  * Each batch replaces the target through [[SwapWrite]] (a
+  * [[graft.sources.Publish]] swap): a crash in any window is rolled back
+  * or completed by the next batch, so the merged history is never lost.
   */
 object UpsertSink {
   def mergeBatch(targetPath: String, keys: Seq[String])
@@ -270,50 +269,30 @@ object AggMaintenanceSink {
 }
 
 /** Crash-recoverable full-replace of a parquet dir, shared by the
-  * foreachBatch sinks.
-  *
-  * Swap protocol: write staging → move current target to a backup → move
-  * staging in → drop backup. This is NOT atomic (plain filesystems have no
-  * multi-dir transactions) but every crash window leaves a recoverable
-  * full copy: either the backup or the staging dir still holds the merged
-  * history. A `_graft_applied_<batchId>` marker travels inside each
-  * written dir; a retried micro-batch whose marker is already in the
-  * target returns without touching state (idempotent replay — REQUIRED
-  * for additive sinks, a free remerge-skip for idempotent ones). Use a
-  * transactional table format for true exactly-once guarantees.
+  * foreachBatch sinks: a [[graft.sources.Publish]] swap of the target,
+  * recovered before the current state is read. A `_graft_applied_<batchId>`
+  * marker travels inside each written dir; a retried micro-batch whose
+  * marker is already in the target returns without touching state
+  * (idempotent replay — REQUIRED for additive sinks, a free remerge-skip
+  * for idempotent ones).
   */
 private[streaming] object SwapWrite {
   def replace(spark: SparkSession, targetPath: String, batchId: Long)
              (next: Option[DataFrame] => DataFrame): Unit = {
-    val fs = new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val target = new Path(targetPath)
-    val backup = new Path(s"$targetPath-backup")
-    // Crash/retry recovery: a failed swap can leave the merged history only
-    // in the backup dir. Restore it FIRST — merging from the raw batch
-    // alone and then deleting the backup would discard all prior merges.
-    if (!fs.exists(target) && fs.exists(backup))
-      require(fs.rename(backup, target), s"restore $backup -> $target failed")
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Crash/retry recovery FIRST: a crashed swap can leave the merged
+    // history only in the retired dir — merging from the raw batch alone
+    // would discard all prior merges.
+    Publish.recover(fs, target)
     val marker = s"_graft_applied_$batchId"
     if (fs.exists(new Path(target, marker))) return // retry of an applied batch
     val merged =
       if (fs.exists(target)) next(Some(spark.read.parquet(targetPath)))
       else next(None)
-    val staging = new Path(s"$targetPath-staging-$batchId")
-    merged.write.mode("overwrite").parquet(staging.toString)
-    fs.create(new Path(staging, marker)).close()
-    // HDFS-style filesystems signal rename/delete failure by returning
-    // false, not throwing — swallow it and the micro-batch is silently
-    // dropped while the stream reports success. Fail loudly so the batch
-    // is retried.
-    def mustRename(from: Path, to: Path): Unit =
-      require(fs.rename(from, to), s"rename $from -> $to failed")
-    if (fs.exists(target)) {
-      if (fs.exists(backup))
-        require(fs.delete(backup, true), s"delete $backup failed")
-      mustRename(target, backup)
+    Publish.replace(fs, target) { staging =>
+      merged.write.parquet(staging.toString)
+      fs.create(new Path(staging, marker)).close()
     }
-    mustRename(staging, target)
-    if (fs.exists(backup))
-      require(fs.delete(backup, true), s"delete $backup failed")
   }
 }

@@ -174,20 +174,21 @@ class IncrementalSpanDedupSpec extends SparkSpec {
     for (day <- 0 to 1)
       IncrementalSpanDedup.append(spark, root,
         docs.filter(pmod(col("doc_id"), lit(3)) === day), "doc_id", "text", 5)
-    // simulate the compaction crash window: counts_tmp fully written,
-    // counts already retired, promote never ran
+    // simulate the compaction crash window of the Publish swap: the
+    // staging copy fully written, counts already retired, promote never ran
+    val counts = new org.apache.hadoop.fs.Path(s"$root/counts")
+    val staging = graft.sources.Publish.staging(counts)
+    val retired = graft.sources.Publish.retired(counts)
     val merged = spark.read.parquet(s"$root/counts")
       .groupBy(col("__h")).agg(sum(col("__c")).as("__c"))
-    merged.write.mode("overwrite").parquet(s"$root/counts_tmp/seg=0")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$root/counts"),
-      new org.apache.hadoop.fs.Path(s"$root/counts_retired")))
-    // next append must recover the tmp side (NOT treat history as zero)
+    merged.write.mode("overwrite").parquet(s"$staging/seg=0")
+    val fs = counts.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(counts, retired))
+    // next append must recover the counts (NOT treat history as zero)
     IncrementalSpanDedup.append(spark, root,
       docs.filter(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "text", 5)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/counts_tmp")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/counts_retired")))
+    assert(!fs.exists(staging))
+    assert(!fs.exists(retired))
     val batch = SpanDedup.removeDuplicateSpans(docs, "doc_id", "text", 5)
     assert(sorted(IncrementalSpanDedup.result(spark, root, "doc_id")) ==
       sorted(batch))

@@ -58,10 +58,11 @@ class IvfStreamSinkSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivf_crash_").toString
     val idx = freshIndex()
     // simulate a crash: staging exists (partial junk), batch dir does not
-    val staging = new java.io.File(s"$dir/.staging_0")
+    val staging = new java.io.File(graft.sources.Publish.staging(
+      new org.apache.hadoop.fs.Path(s"$dir/delta_batch=0")).toString)
     assert(staging.mkdirs())
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/.staging_0/garbage"), "partial")
+      java.nio.file.Paths.get(s"$staging/garbage"), "partial")
     val b0 = emb.filter(col("vec_id") < 100).select(col("vec_id"), col("embedding"))
     IvfStreamSink.appendBatch(dir, idx.trained, "vec_id", "embedding")(b0, 0L)
     assert(!staging.exists(), "staging dir must be consumed by the publish")

@@ -64,7 +64,7 @@ class NbStreamFilterSpec extends SparkSpec {
     val m = model
     val fs = new Path(target).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(s"$target/.staging_0")
+    val staging = graft.sources.Publish.staging(new Path(s"$target/score_batch=0"))
     fs.mkdirs(staging) // simulate a crashed attempt's leftover
     NbStreamFilter.appendBatch(target, m, "doc_id", "text")(
       Seq((10L, "the fox reads prose")).toDF("doc_id", "text"), 0L)

@@ -178,19 +178,20 @@ class StreamingSpec extends SparkSpec {
     val target = s"$dir/target"
     // batch 0 establishes history
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(target)
-    // simulate a crash between target->backup and staging->target: the
-    // merged history sits ONLY in the backup dir
+    // simulate a crash between the retire and the promote renames of the
+    // Publish swap: the merged history sits ONLY in the retired dir
     val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(target), new Path(s"$target-backup")))
-    // the retried batch must restore the backup and merge INTO it, not
-    // rebuild from the batch alone
+    val retired = graft.sources.Publish.retired(new Path(target))
+    assert(fs.rename(new Path(target), retired))
+    // the retried batch must restore the retired copy and merge INTO it,
+    // not rebuild from the batch alone
     UpsertSink.mergeBatch(target, Seq("k"))(
       Seq((2L, "b2"), (3L, "c")).toDF("k", "v"), batchId = 1L)
     val out = spark.read.parquet(target).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out == Map(1L -> "a", 2L -> "b2", 3L -> "c"),
       "history row k=1 survived the crashed swap")
-    assert(!fs.exists(new Path(s"$target-backup")))
+    assert(!fs.exists(retired))
   }
 
   test("AggMaintenanceSink maintains a running mart; retried batches are no-ops") {
