@@ -4,7 +4,9 @@ import java.io.{File, PrintWriter}
 
 /** Dumps the formatted physical plan of every SparkEntry query to a
   * markdown file — the plan-quality audit trail (pushdown, pruned schemas,
-  * broadcast vs shuffle joins, codegen spans).
+  * broadcast vs shuffle joins, codegen spans). `SPARK_GRAFT_ONLY` narrows
+  * it to named queries: a per-query before/after plan is
+  * `SPARK_GRAFT_ONLY=q… runMain graft.Explain <sfDir> <out.md>` on each side.
   *
   * Usage: sbt "runMain graft.Explain [sfDir] [outFile]"
   */
@@ -20,7 +22,7 @@ object Explain {
     pw.println(s"# Physical plans (`explain formatted`) at $sfDir\n")
     pw.println("Generated by `graft.Explain`. Audit points: `PushedFilters`/`ReadSchema`")
     pw.println("on every scan, broadcast vs shuffle join choices, codegen stage spans.\n")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.selectedQueries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val plan = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

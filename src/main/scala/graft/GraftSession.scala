@@ -47,20 +47,7 @@ object GraftSession {
       // shuffle-to-broadcast demotion
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE partition-coalescing dials, parameterized for measurement
-      // and per-deployment tuning (env for the bench harness, builder
-      // conf for embedders); the DEFAULTS are Spark's stock values. A
-      // round-20 controlled A/B/A at sf0.1 measured parallelismFirst=
-      // false + small advisory sizes LOSING to stock on CPU-dense
-      // integer shuffles (PageRank's edge join serialized onto 1-2
-      // post-coalesce tasks: 9.4 s stock vs 13.3 s size-first), while
-      // tiny KiB exchanges are already coalesced under stock settings
-      // by minPartitionSize — so stock wins both regimes here. At
-      // 100 TB the calculus flips toward larger advisory sizes (shuffle
-      // block count dominates — guide §2.2); that is a conf, not a code
-      // change, and values never affect results.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
+      // AQE coalescing dials stay at Spark's stock values, which
+      // OPTIMIZATION_r20.md §5 measured as best at sf0.1; a 100 TB
+      // deployment raises the advisory size through its own --conf.
 }

@@ -90,9 +90,14 @@ object ProbeProfile {
       // listener events are posted asynchronously; drain before reading
       Thread.sleep(500)
       val recs = jobs.synchronized { jobs.values.toVector.sortBy(_.start) }
-      val jobTotal = recs.map(j => math.max(0L, j.end - j.start)).sum
+      // union of the job intervals, not their sum: jobs overlap under Par
+      val (jobTotal, _) = recs.foldLeft((0L, Long.MinValue)) {
+        case ((busy, reach), j) =>
+          (busy + math.max(0L, j.end - math.max(j.start, reach)),
+            math.max(reach, j.end))
+      }
       println(f"== $name run $r: wall ${wall}%.0f ms, ${recs.size} jobs, " +
-        f"sum(job wall) $jobTotal ms, driver/gap ${wall - jobTotal}%.0f ms")
+        f"union(job wall) $jobTotal ms, driver/gap ${wall - jobTotal}%.0f ms")
       var prevEnd = 0L
       recs.foreach { j =>
         val gap = if (prevEnd == 0L) 0L else math.max(0L, j.start - prevEnd)

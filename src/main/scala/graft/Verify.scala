@@ -12,14 +12,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated name filter for local iteration; the driver
-    // leaves it unset and dumps the full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.filter {
-      case (name, _) => only.forall(_.contains(name))
-    }
-    selected.foreach { case (name, fn) =>
+    SparkEntry.selectedQueries.foreach { case (name, fn) =>
       // scoped: operator-internal caches (dedup/similarity hash frames)
       // release as soon as the query's write finishes
       try graft.operators.OpCache.scoped {

@@ -13,9 +13,9 @@ object Cleanse {
     * percentiles: the standard robust-statistics answer to fat-tailed
     * price/metric columns ahead of averaging or model features.
     *
-    * The bounds come from [[Quantiles.exactDiscrete]] (distributed
-    * two-phase prefix sum — no approx_percentile drift, no single
-    * partition) and ride back as a broadcast 1-row frame; the clip itself
+    * The bounds come from [[Quantiles.exactDiscrete]] (a running count by
+    * [[PrefixSum]] — no approx_percentile drift, no single partition) and
+    * ride back as a broadcast 1-row frame; the clip itself
     * is a pure projection. Output adds `<valueCol alias>_clipped` plus the
     * bound columns so downstream audits can see WHAT was clipped.
     */

@@ -26,7 +26,8 @@ import graft.operators.dedup.TextShingles
   * A MEAN of ratios instead of a sum of logs — a monotone-comparable
   * surrogate with the same "weights features the target over-represents"
   * shape, and every step bit-replayable in integer SQL. The selection
-  * cut is an exact-rank threshold ([[Quantiles.exactDiscreteAtRank]]):
+  * cut is an exact-rank threshold ([[Quantiles.exactDiscreteAtRank]],
+  * a running count by [[PrefixSum]]):
   * keep spt ≥ the (n − (n·keepPct) DIV 100 + 1)-th smallest — ties at
   * the threshold all survive (deterministic; ≥ keepPct% kept).
   *
@@ -37,7 +38,7 @@ import graft.operators.dedup.TextShingles
   * Scale shape: one (doc, bucket) partial-agg shuffle (the q54 tf
   * shape), one `buckets`-row stats agg, a BROADCAST weight join (the
   * weight table is ≤ `buckets` rows by construction), one per-doc agg,
-  * and the two-phase exact-rank cut. Driver state: the two corpus totals
+  * and the exact-rank cut. Driver state: the two corpus totals
   * and the node count inside the rank cut — three bounded longs. Two
   * overflow guards, both loud: the [[WScale]] require keeps every
   * summand under 2⁶² (tw < 2³¹ and per-doc counts < 2³¹; tgt_f ≤ raw_f

@@ -1,23 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
-/** Distributed global ROW_NUMBER / NTILE with NO single-partition exchange —
-  * the window-function trap this repo's Quantiles scaladoc forbids
-  * (`Window.orderBy(...)` with no partition key drags every row into one
-  * task) solved with the same two-phase prefix-sum machinery as
-  * [[Quantiles.exactDiscrete]], applied to whole rows instead of value
-  * counts:
-  *
-  *   1. `repartitionByRange` on the sort expressions (a RANGE exchange —
-  *      distributed, P-way) + `sortWithinPartitions`;
-  *   2. one sorted pass per partition assigns local 0-based indexes
-  *      (mapPartitions, zero further exchange);
-  *   3. P per-partition counts — P numbers — come to the driver for the
-  *      exclusive prefix offsets and broadcast back; global rank is
-  *      offset + local index + 1.
+/** Distributed global ROW_NUMBER / NTILE with NO single-partition
+  * exchange: the rank is [[PrefixSum.global]] with a measure of 1.
   *
   * Rank is exact and deterministic whenever the sort key is a TOTAL order
   * over the rows (ties across partition boundaries would otherwise make the
@@ -40,72 +28,36 @@ object GlobalRank {
     *                  strict total order for the rank to be deterministic
     * @param rankCol   output column name (long, 1-based)
     * @param partitions range partitions; P totals hit the driver — keep it
-    *                  modest (the deliberate bounded driver step of the
-    *                  two-phase prefix sum)
+    *                  modest
     */
   def rowNumber(df: DataFrame, sortExprs: Seq[Column], rankCol: String = "rank",
-                partitions: Int = 64): DataFrame = {
+                partitions: Int = 64): DataFrame =
+    ranked(df, sortExprs, rankCol, partitions)._1
+
+  /** The ranked frame and its row count n. */
+  private def ranked(df: DataFrame, sortExprs: Seq[Column], rankCol: String,
+                     partitions: Int): (DataFrame, Long) = {
     require(sortExprs.nonEmpty, "rowNumber needs at least one sort expression")
     require(!df.columns.contains(rankCol),
       s"rank column '$rankCol' collides with an input column; rename it")
-    Seq("__pid", "__idx", "__offset").foreach(c => require(
-      !df.columns.contains(c),
-      s"input column '$c' collides with rowNumber's internal bookkeeping; rename it"))
-    val spark = df.sparkSession
-
-    val ranged = df.repartitionByRange(partitions, sortExprs: _*)
-      .sortWithinPartitions(sortExprs: _*)
-    val outSchema = StructType(ranged.schema.fields :+
-      StructField("__pid", IntegerType, nullable = false) :+
-      StructField("__idx", LongType, nullable = false))
-    val indexed = ranged.mapPartitions { rows =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var i = 0L
-      rows.map { r =>
-        val out = Row.fromSeq(r.toSeq :+ pid :+ i)
-        i += 1
-        out
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-
-    // cache: the frame feeds the totals collect AND the final offset join;
-    // without it the two consumers could range-partition rows differently
-    // (sampled split points) and tear the prefix offsets
-    val cached = OpCache.cache(indexed)
-
-    val counts = cached.groupBy(col("__pid"))
-      .agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until partitions)
-      .scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L))
-    val offsetDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        (0 until partitions).map(p => Row(p, offsets(p))), 1),
-      StructType(Seq(StructField("__pid", IntegerType, nullable = false),
-        StructField("__offset", LongType, nullable = false))))
-
-    cached.join(broadcast(offsetDf), Seq("__pid"))
-      .withColumn(rankCol, col("__offset") + col("__idx") + lit(1L))
-      .drop("__pid", "__idx", "__offset")
+    PrefixSum.global(df, sortExprs, lit(1L), rankCol, partitions)
   }
 
   /** `df` plus an NTILE(k) bucket (1..k) over `sortExprs` — SQL NTILE
     * semantics exactly: with n rows, the first n % k buckets hold
     * n/k + 1 rows and the rest hold n/k, assigned in rank order. Built on
     * [[rowNumber]], so the plan is a range exchange + broadcast join —
-    * never `Exchange SinglePartition`.
+    * never `Exchange SinglePartition` — and n is the prefix sum's total,
+    * so no count runs.
     */
   def ntile(df: DataFrame, sortExprs: Seq[Column], k: Int,
             tileCol: String = "tile", partitions: Int = 64): DataFrame = {
     require(k > 0, s"ntile needs k > 0, got $k")
     val rankCol = "__gr_rank"
-    val ranked = rowNumber(df, sortExprs, rankCol, partitions)
-    // n is known driver-side from the prefix-sum totals, but re-deriving it
-    // here would collect again; a scalar broadcast-joined count is one tiny
-    // extra stage and keeps rowNumber's surface clean
-    val nDf = broadcast(ranked.agg(count(lit(1)).as("__gr_n")))
+    // n comes with the rank: the prefix sum's driver-side totals
+    val (rows, nRows) = ranked(df, sortExprs, rankCol, partitions)
     val r = col(rankCol)
-    val n = col("__gr_n")
+    val n = lit(nRows)
     // exact integer division via Catalyst's IntegralDivide (SQL `div`):
     // pure long arithmetic end-to-end. The previous (a - a%d)/d form
     // routed through a double divide, whose exactness claim only held for
@@ -122,8 +74,6 @@ object GlobalRank {
     val bigSpan = rem * (base + lit(1L))
     val tile = when(r <= bigSpan, intDiv(r - lit(1L), base + lit(1L)) + lit(1L))
       .otherwise(rem + intDiv(r - lit(1L) - bigSpan, base) + lit(1L))
-    ranked.crossJoin(nDf)
-      .withColumn(tileCol, tile.cast(IntegerType))
-      .drop(rankCol, "__gr_n")
+    rows.withColumn(tileCol, tile.cast(IntegerType)).drop(rankCol)
   }
 }

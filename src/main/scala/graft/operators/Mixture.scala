@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** Mixture materialization: EXECUTE the per-source token budget a mixture
   * recipe prescribes (the step after [[graft.operators.BpeTrain
@@ -15,22 +15,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * document; exact-to-the-token truncation would split documents).
   *
   * The cut needs each document's cumulative token offset WITHIN its
-  * source. A per-source window sort over the DATA is the natural Spark
-  * expression but serializes every source into one partition — a
-  * corpus-scale sort per source at 100 TB. This is instead the GROUPED
-  * two-phase exact prefix sum ([[Quantiles]]' core, keyed): range-
-  * partition by (source, id), one sorted local-cumsum pass per partition
-  * (sums reset on source change), then per-(partition, source) TOTALS —
-  * at most P rows per source — get their prefix offsets from a window
-  * `partitionBy(src).orderBy(pid)` over the totals FRAME (each window
-  * group is ≤ P rows — bounded per group, the case where a window IS the
-  * right tool, per [[Quantiles]]' own doc) and join back on (pid, src).
-  * Nothing touches the driver: the source domain may be open and
-  * web-scale (millions of values — exactly why [[Sampling.capPerSource]]
-  * exists), and the totals frame scales as a SHUFFLE, not driver memory.
-  * All-integer arithmetic: the offsets and cumsums are BIGINT sums in a
-  * pinned order, bit-replayable by any engine's per-source ordered
-  * window.
+  * source: [[PrefixSum.perGroup]] grouped by source, in `idCol` order.
+  * A per-source window sort over the DATA would serialize every source
+  * into one partition; the grouped prefix sum keeps its offsets
+  * distributed, so the source domain may be open and web-scale (millions
+  * of values — exactly why [[Sampling.capPerSource]] exists). All-integer
+  * arithmetic: the offsets and cumsums are BIGINT sums in a pinned order,
+  * bit-replayable by any engine's per-source ordered window.
   *
   * Rows with a NULL source are EXCLUDED (a document with no source can
   * draw no source's budget — [[Sampling.deterministicSplit]]'s
@@ -60,45 +51,10 @@ object Mixture {
       .select(idGuarded.as("id"),
         col(srcCol).cast("string").as("src"),
         coalesce(col(tokenCol).cast("long"), lit(0L)).as("tok"))
-    val ranged = base.repartitionByRange(partitions, col("src"), col("id"))
-      .sortWithinPartitions(col("src"), col("id"))
-
-    val cumSchema = StructType(Seq(
-      StructField("pid", LongType, nullable = false),
-      StructField("id", LongType),
-      StructField("src", StringType),
-      StructField("tok", LongType, nullable = false),
-      StructField("local_cum", LongType, nullable = false)))
-    val localCum = ranged.mapPartitions { rows =>
-      val pid = org.apache.spark.TaskContext.getPartitionId().toLong
-      var curSrc: String = null
-      var started = false
-      var cum = 0L
-      rows.map { r =>
-        val src = r.getString(1)
-        if (!started || src != curSrc) { cum = 0L; curSrc = src; started = true }
-        cum += r.getLong(2)
-        Row(pid, r.getLong(0), src, r.getLong(2), cum)
-      }
-    }(org.apache.spark.sql.Encoders.row(cumSchema))
-    val cached = OpCache.cache(localCum)
-
-    // per-(partition, source) totals stay DISTRIBUTED: the window group
-    // is keyed by src and holds at most P rows, so the exclusive prefix
-    // sum is a bounded per-group window, never a driver materialization —
-    // the source domain may be open (millions of values at 100 TB)
-    val totals = cached.groupBy(col("pid"), col("src"))
-      .agg(max(col("local_cum")).as("t"))
-    val offWin = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("pid"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offDf = totals.select(col("pid"), col("src"),
-      coalesce(sum(col("t")).over(offWin), lit(0L)).as("off"))
-
-    cached.join(offDf, Seq("pid", "src"))
+    PrefixSum.perGroup(base, "src", Seq(col("id")), col("tok"), "src_cum",
+        partitions)
       .select(col("id").as(idCol), col("src").as(srcCol),
-        col("tok").as(tokenCol),
-        (col("local_cum") + col("off")).as("src_cum"))
+        col("tok").as(tokenCol), col("src_cum"))
   }
 
   /** The quota cut: keep each source's documents, in `idCol` order, while

@@ -37,7 +37,8 @@ import org.apache.spark.sql.functions._
   * score instead of the geometric mean behind perplexity: a monotone-
   * comparable surrogate with the same "unpredictable text scores low"
   * shape, bit-replayable in integer SQL. The keep cut is the exact-rank
-  * threshold ([[Quantiles.exactDiscreteAtRank]], the [[Dsir]] tail):
+  * threshold ([[Quantiles.exactDiscreteAtRank]] on [[PrefixSum]], the
+  * [[Dsir]] tail):
   * keep lm_score_per_tok ≥ the (n − (n·keepPct) DIV 100 + 1)-th
   * smallest; threshold ties all survive.
   *
@@ -46,8 +47,8 @@ import org.apache.spark.sql.functions._
   * `transform` over the token array, no self-join, no positional
   * carry-through), two target-side aggs reusing that frame, three
   * broadcast hash joins against the count tables (unigram as word,
-  * unigram as context, bigram), one per-doc agg, and the two-phase
-  * exact-rank cut. Driver state: the (N, V) pair inside one 2-long agg
+  * unigram as context, bigram), one per-doc agg, and the exact-rank
+  * cut. Driver state: the (N, V) pair inside one 2-long agg
   * plus the rank cut's P partition totals — all bounded. The count
   * tables are CURATED-TARGET-sized (CCNet's is Wikipedia), so broadcast
   * is the usual route; the DEFAULT is now AUTO ([[JoinRouting]]): the
@@ -230,7 +231,7 @@ object NgramLm {
     * so the cached count frame carries a flag column per stratum and
     * each LM derives its count tables from it — then per model the
     * broadcast count joins + per-doc agg of [[score]], one doc-keyed
-    * join of the two bounded score frames, the two-phase rank cut.
+    * join of the two bounded score frames, the exact-rank cut.
     * Driver state unchanged from [[score]].
     */
   def contrastiveFlagged(docs: DataFrame, idCol: String, textCol: String,

@@ -12,15 +12,11 @@ import org.apache.spark.sql.functions._
   * cumulative count reaches ceil(q·N). Integer arithmetic end-to-end, so
   * any engine agrees exactly.
   *
-  * Scale shape — the textbook two-phase distributed prefix sum, NOT a
-  * global window: (1) partial-agg value counts (the only row-volume
-  * shuffle, and it collapses to |distinct values|); (2) range-partition
-  * the count table by value and cumsum each partition independently in one
-  * sorted pass (mapPartitions, zero further exchange); (3) per-partition
-  * totals — P numbers — come to the driver for the prefix offsets and
-  * broadcast back. A `Window.orderBy(v)` with no partition would instead
-  * drag every distinct value into ONE task; that is the trap this operator
-  * exists to avoid.
+  * Scale shape: partial-agg value counts (the only row-volume shuffle, and
+  * it collapses to |distinct values|), then the running count is
+  * [[PrefixSum.global]] over the count table by value — never a
+  * `Window.orderBy(v)` with no partition, which would drag every distinct
+  * value into ONE task.
   */
 object Quantiles {
 
@@ -57,9 +53,8 @@ object Quantiles {
     * to the 1-based target rank; returns one row (value) = the smallest v
     * whose cumulative count reaches the target, or zero rows when the
     * target exceeds n (an empty selection, not an error — callers decide).
-    * Same two-phase exact prefix sum as [[exactDiscrete]]; no float q
-    * enters the arithmetic, so the cut is bit-replayable from pure
-    * integer SQL.
+    * Same running count as [[exactDiscrete]]; no float q enters the
+    * arithmetic, so the cut is bit-replayable from pure integer SQL.
     */
   def exactDiscreteAtRank(df: DataFrame, valueCol: Column,
                           rankOf: Long => Long,
@@ -71,65 +66,22 @@ object Quantiles {
       .filter(col("value").isNotNull)
   }
 
-  /** Shared two-phase exact prefix sum: per-value counts, range-partition
-    * by value, one sorted local cumsum pass, P partition totals to the
-    * driver (the deliberate bounded collect), broadcast prefix offsets
-    * back. Returns the (v, cum) frame and the total non-null count.
+  /** Per-value counts and their running count `cum` by value
+    * ([[PrefixSum.global]]), plus the total non-null count.
     */
   private def cumAndN(df: DataFrame, valueCol: Column,
                       partitions: Int): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-
     val counts = df.filter(valueCol.isNotNull)
       .select(valueCol.cast("long").as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("c"))
-    val ranged = counts.repartitionByRange(partitions, col("v"))
-      .sortWithinPartitions(col("v"))
-
-    // one sorted pass per partition: local cumulative counts, no exchange
-    val cumSchema = StructType(Seq(StructField("pid", LongType, nullable = false),
-      StructField("v", LongType), StructField("local_cum", LongType, nullable = false)))
-    val localCum = ranged.mapPartitions { rows =>
-      var cum = 0L
-      val pid = org.apache.spark.TaskContext.getPartitionId().toLong
-      rows.map { r =>
-        cum += r.getLong(1)
-        org.apache.spark.sql.Row(pid, r.getLong(0), cum)
-      }
-    }(org.apache.spark.sql.Encoders.row(cumSchema))
-
-    // cache: the frame feeds the totals collect AND the final probe; the
-    // cumsum pass must also run ONCE or the two consumers could range-
-    // partition rows differently and tear the prefix offsets
-    val cached = OpCache.cache(localCum)
-
-    // P partition totals -> driver -> exclusive prefix offsets (tiny by
-    // construction: `partitions` rows, the deliberate driver step of the
-    // two-phase prefix sum)
-    val totals = cached.groupBy(col("pid"))
-      .agg(max(col("local_cum")).as("t"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val n = totals.values.sum
-    val offsets = (0L until partitions.toLong)
-      .scanLeft(0L)((acc, p) => acc + totals.getOrElse(p, 0L))
-    val offsetDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        (0L until partitions.toLong).map(p =>
-          org.apache.spark.sql.Row(p, offsets(p.toInt))), 1),
-      StructType(Seq(StructField("pid", LongType, nullable = false),
-        StructField("offset", LongType, nullable = false))))
-
-    val cum = cached.join(broadcast(offsetDf), Seq("pid"))
-      .select(col("v"), (col("local_cum") + col("offset")).as("cum"))
-    (cum, n)
+    PrefixSum.global(counts, Seq(col("v")), col("c"), "cum", partitions)
   }
 
   /** PER-GROUP exact discrete quantiles. Here a window IS the right tool —
     * `Window.partitionBy(group)` hash-partitions on the group key and each
     * group's cumsum is bounded by that group's distinct values, so there is
-    * no single-partition cliff (the global variant above is where the
-    * two-phase prefix sum is mandatory). One row per (group, q).
+    * no single-partition cliff (the global variant above is where
+    * [[PrefixSum]] is mandatory). One row per (group, q).
     */
   def exactDiscretePerGroup(df: DataFrame, groupCol: String, valueCol: Column,
                             qs: Seq[Double]): DataFrame = {
@@ -164,8 +116,8 @@ object Quantiles {
   }
 
   /** Approximate quantiles from a FIXED-WIDTH histogram sketch — the
-    * mergeable scale path beside [[exactDiscrete]]'s exact two-phase
-    * prefix sum: bucket counts are one partial-agg pass (≤ `buckets` rows
+    * mergeable scale path beside [[exactDiscrete]]'s exact running
+    * count: bucket counts are one partial-agg pass (≤ `buckets` rows
     * cross the exchange regardless of input size), they MERGE by addition
     * across partitions/days like the other sketches, and the estimate
     * reads the cumulative histogram. Error is bounded by the bucket width

@@ -28,10 +28,10 @@ import org.apache.spark.sql.functions._
   * byte-order contract for the physical export.
   *
   * Scale shape: assignment is a pure per-row projection (no shuffle);
-  * the rank is [[GlobalRank.rowNumber]] over (shard, sort_key, id) — a
-  * range exchange + P-bounded offset collect, never a single-partition
-  * window — and the per-shard re-basing joins an nShards-row broadcast
-  * of per-shard min ranks (one partial-agg pass over the ranked frame).
+  * `seq` is [[PrefixSum.perGroup]] grouped by shard with a measure of 1,
+  * ordered by (sort_key, id) — a range exchange and a per-shard offset
+  * window, never a single-partition window, and no job runs until the
+  * manifest is evaluated.
   * The physical writer ([[writeShards]]) repartitions on the shard
   * column and sorts within partitions, so each shard file's row order
   * equals its manifest `seq` order; `partitionBy` gives one directory
@@ -99,27 +99,16 @@ object Sharding {
   private def assignShard(df: DataFrame, idCol: String,
                           nShards: Int): DataFrame = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
-    df.withColumn("shard",
-      Sampling.hashBucket(guarded(col(idCol)), nShards, ShardSalt))
+    // shard leads the manifest's columns
+    df.select(Sampling.hashBucket(guarded(col(idCol)), nShards, ShardSalt)
+      .as("shard"), col("*"))
   }
 
-  /** 1-based (orderCols, id) rank within each shard via ONE global
-    * [[GlobalRank.rowNumber]] over (shard, orderCols, id) re-based per
-    * shard by an nShards-row broadcast of per-shard min ranks (global
-    * order is shard-major, so rank − min + 1 IS the per-shard
-    * row_number).
-    */
+  /** 1-based (orderCols, id) rank within each shard. */
   private def seqRanked(assigned: DataFrame, idCol: String,
-                        orderCols: Seq[Column], partitions: Int): DataFrame = {
-    val ranked = GlobalRank.rowNumber(assigned,
-      col("shard").asc +: orderCols :+ col(idCol).asc,
-      rankCol = "__grank", partitions = partitions)
-    val base = ranked.groupBy(col("shard"))
-      .agg(min(col("__grank")).as("__base"))
-    ranked.join(broadcast(base), Seq("shard"))
-      .withColumn("seq", col("__grank") - col("__base") + lit(1L))
-      .drop("__grank", "__base")
-  }
+                        orderCols: Seq[Column], partitions: Int): DataFrame =
+    PrefixSum.perGroup(assigned, "shard", orderCols :+ col(idCol).asc,
+      lit(1L), "seq", partitions)
 
   /** Per-shard INTEGRITY stats — the audit table a byte-reproducible
     * export ships beside its shards: (shard, n_docs, min_key, max_key,

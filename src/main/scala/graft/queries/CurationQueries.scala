@@ -494,9 +494,10 @@ object CurationQueries {
     * quota EXECUTION step after q141's accounting: each source
     * contributes docs in doc_id order until its token quota is spent
     * (start-offset convention — a doc starting inside the quota is kept
-    * whole). The engine computes per-source offsets with the grouped
-    * two-phase exact prefix sum (no per-source window sort); the oracle
-    * IS the per-source ordered window — the equivalence under test.
+    * whole). The engine computes per-source offsets with
+    * [[graft.operators.PrefixSum.perGroup]] (no per-source window sort);
+    * the oracle IS the per-source ordered window — the equivalence under
+    * test.
     */
   def q142MixtureQuota(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
@@ -1252,7 +1253,7 @@ object CurationQueries {
     * 1-based final position in the shard file. The oracle replays the
     * hashes digit-for-digit and the rank as a per-shard row_number.
     * See [[graft.operators.Sharding]] for the scale shape (projection +
-    * GlobalRank two-phase rank — no single-partition window).
+    * a per-shard [[graft.operators.PrefixSum]] — no single-partition window).
     *
     * Null-id contract (q157 AND q165, intentionally unlike the other
     * documents oracles' `doc_id IS NOT NULL` convention): an export

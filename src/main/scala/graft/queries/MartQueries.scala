@@ -296,10 +296,11 @@ object MartQueries {
   private def totalPriceCentsSql(prefix: String = "") =
     s"CAST(CAST(${prefix}o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
-  /** q62: exact discrete quantiles of order totals (in cents) via the
-    * two-phase distributed prefix sum ([[graft.operators.Quantiles]]) —
-    * integer arithmetic end-to-end, so the DuckDB cumulative replay agrees
-    * exactly; no approx_percentile, no single-partition window.
+  /** q62: exact discrete quantiles of order totals (in cents) via
+    * [[graft.operators.Quantiles]]' running count
+    * ([[graft.operators.PrefixSum]]) — integer arithmetic end-to-end, so
+    * the DuckDB cumulative replay agrees exactly; no approx_percentile, no
+    * single-partition window.
     */
   def q62PriceQuantiles(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Quantiles.exactDiscrete(
@@ -535,8 +536,8 @@ object MartQueries {
     * spend (totally ordered by (spend desc, custkey) so bucket boundaries
     * are deterministic), then per-quartile stats. The customer frame grows
     * with the fact, so the global ranking runs through
-    * [[graft.operators.GlobalRank.ntile]]'s two-phase prefix sum (range
-    * exchange + P driver offsets) — a `Window.orderBy` with no partition
+    * [[graft.operators.GlobalRank.ntile]], a [[graft.operators.PrefixSum]]
+    * (range exchange + P driver offsets) — a `Window.orderBy` with no partition
     * key would drag every customer into ONE task (`Exchange
     * SinglePartition`), the scale trap the round-8 audit flagged here.
     */

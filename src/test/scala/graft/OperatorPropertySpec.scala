@@ -163,4 +163,79 @@ class OperatorPropertySpec extends SparkSpec {
       }
     }
   }
+
+  /** Spark jobs started while `body` runs (the listener bus is async:
+    * wait until the count stops moving).
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      var last = -1
+      var stable = 0
+      while (stable < 5) {
+        Thread.sleep(100)
+        val cur = n.get()
+        if (cur == last) stable += 1 else { stable = 0; last = cur }
+      }
+      (out, n.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** (id, g, o, m): unique id, `groups` group keys plus nulls when there
+    * is more than one, duplicate-heavy o, signed measure.
+    */
+  private def prefixRows(seed: Int, groups: Int, n: Int) = {
+    val rnd = new scala.util.Random(seed)
+    (1 to n).map { i =>
+      val g = if (groups > 1 && rnd.nextInt(10) == 0) None
+        else Some(s"g${rnd.nextInt(groups)}")
+      (i.toLong, g, rnd.nextInt(9).toLong, rnd.nextInt(101) - 50L)
+    }.toDF("id", "g", "o", "m").repartition(3)
+  }
+
+  test("PrefixSum equals the window running sum on random data") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.PrefixSum
+    val order = Seq(col("o").desc, col("id").asc)
+    val upTo = Window.unboundedPreceding
+    // (groups, rows, partitions, jobs): one group spanning every range
+    // partition, more groups than partitions, one partition, empty input;
+    // jobs = what GlobalRank.rowNumber ran while building on the same
+    // input before it moved onto PrefixSum
+    val cases = Seq((1, 120, 7, 5), (1, 120, 1, 3), (20, 150, 7, 5),
+      (20, 150, 1, 3), (3, 0, 7, 1), (3, 0, 1, 1))
+    cases.zipWithIndex.foreach { case ((groups, n, parts, rankJobs), i) =>
+      val df = prefixRows(i, groups, n)
+      val what = s"groups=$groups rows=$n partitions=$parts"
+      def byId(out: org.apache.spark.sql.DataFrame) =
+        out.select("id", "s").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      if (groups == 1 && parts == 7) assert(df.repartitionByRange(parts, order: _*)
+        .select(spark_partition_id()).distinct().count() == parts,
+        s"$what: the one group must span every range partition")
+
+      val (global, nGlobal) = jobsDuring(PrefixSum.global(df, order, col("m"), "s", parts))
+      val (all, total) = global
+      assert(all.columns.toSeq == df.columns.toSeq :+ "s", what)
+      assert(total == df.agg(coalesce(sum("m"), lit(0L))).first().getLong(0), what)
+      assert(byId(all) == byId(df.withColumn("s",
+        sum(col("m")).over(Window.orderBy(order: _*).rowsBetween(upTo, 0)))),
+        s"$what: global running sum != window")
+      // the eager totals collect
+      assert(nGlobal <= rankJobs, s"$what: global build ran $nGlobal jobs")
+
+      val (grouped, nGrouped) = jobsDuring(
+        PrefixSum.perGroup(df, "g", order, col("m"), "s", parts))
+      assert(nGrouped == 0, s"$what: grouped build ran $nGrouped jobs")
+      assert(grouped.columns.toSeq == df.columns.toSeq :+ "s", what)
+      assert(byId(grouped) == byId(df.withColumn("s", sum(col("m")).over(
+        Window.partitionBy("g").orderBy(order: _*).rowsBetween(upTo, 0)))),
+        s"$what: grouped running sum != window")
+    }
+  }
 }
